@@ -19,7 +19,8 @@ makes it executable over the committed stream_history.jsonl:
 
 Band: the batch host band is 1.2-1.4x on byte-identical code; 10x
 stream windows swing harder (ratios 1.26-2.10 observed on identical
-code — BASELINE.md r17 "s_session_timer" row). Default band is 1.5 for
+code — the 10x-dir "s_session_timer" rows of stream_history.jsonl, kept
+as history after that pipeline was retired). Default band is 1.5 for
 the /root/testdata sf dirs and 2.2 for ScaleGen dirs (anything else);
 --band overrides both.
 

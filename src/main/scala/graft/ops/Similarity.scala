@@ -631,75 +631,6 @@ object Similarity {
   private[ops] final case class IvfParts(
       qc: DataFrame, assign: DataFrame, cents: DataFrame, cosExpr: Column)
 
-  /** A/B instrument for the cold-build fusion's SCALE claim (round-17
-    * verdict #3): runs the full-corpus index pass in both A/B'd forms —
-    * FUSED (codes computed inline in the one assignment scan,
-    * checkpointing 16 B/row (vec_id, cid); the shipped trainOn shape)
-    * vs CHECKPOINT-CODES (the rejected pre-fusion shape: materialize
-    * the 520 B/row code cache first, then assign from it) — against the
-    * SAME trained centroids, twice each in alternating order so pass 2
-    * is past JIT/codegen warmup. sf0.1 is codegen-bound (±3 s run
-    * spread swamps the form difference — the round-17 honest miss);
-    * this exists to be run at the 10×/30× dirs, where the corpus-sized
-    * materialization the old form pays is big enough to measure.
-    * Measurement-only, never load-bearing. */
-  private[graft] def indexPassAB(s: SparkSession, d: String)
-      : Seq[(String, Int, Double, Long)] = {
-    val src = T.embeddings(s, d)
-    val (parts, _) = trainedParts(s, d) // centroids via the normal cache
-    val cents = parts.cents
-    val sc = s.sparkContext
-    // Each measured run releases every block it pinned before the next
-    // starts — without this the 520 B/row code caches of earlier rounds
-    // accumulate and memory pressure, not form, drives the numbers.
-    def run(body: => DataFrame): (Double, Long) = {
-      val before = sc.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      body.localCheckpoint()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val newIds = sc.getPersistentRDDs.keySet -- before
-      val bytes = sc.getRDDStorageInfo
-        .filter(i => newIds.contains(i.id))
-        .map(i => i.memSize + i.diskSize).sum
-      sc.getPersistentRDDs.filter(kv => newIds.contains(kv._1))
-        .values.foreach(_.unpersist(true))
-      (sec, bytes)
-    }
-    val width = sc.defaultParallelism
-    (1 to 3).flatMap { pass =>
-      Seq("fused", "checkpoint-codes", "fused-repart").map { form =>
-        val (sec, bytes) = run {
-          form match {
-            case "fused" => assignAgainst(s, codesProj(s, src), cents)
-            case "fused-repart" =>
-              // the scan-parallelism hazard this A/B surfaced: ScaleGen
-              // replication compresses to ONE parquet part, so the
-              // O(n·k) argmax runs at file parallelism — one task.
-              // An explicit width repartition shuffles the codes once
-              // (transient, spillable) and runs the compute at cluster
-              // width.
-              assignAgainst(s, codesProj(s, src).repartition(width), cents)
-            case _ =>
-              val qcAll = codesProj(s, src).localCheckpoint()
-              assignAgainst(s, qcAll, cents)
-          }
-        }
-        (form, pass, sec, bytes)
-      }
-    }
-  }
-
-  /** Diagnostic stage hook (tools.IvfProbe): called with (stage, nanos)
-    * after each eager materialization in the IVF build. No-op by
-    * default; measurement-only, never load-bearing. */
-  private[graft] var ivfStageHook: (String, Long) => Unit = (_, _) => ()
-  private def staged[T](name: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    ivfStageHook(name, System.nanoTime() - t0)
-    r
-  }
-
   /** integer-code projection of an embeddings-shaped frame — LAZY: the
     * round-16 ask #5 fusion computes codes inline inside the one
     * full-corpus assignment scan instead of materializing them first. */
@@ -715,7 +646,7 @@ object Similarity {
     * release when the plan is GC'd) — the delta-refresh path and the
     * external-centroid assign still want a frozen code slice. */
   private def codesOf(s: SparkSession, src: DataFrame): DataFrame =
-    staged("codes-scan-ckpt")(codesProj(s, src).localCheckpoint())
+    codesProj(s, src).localCheckpoint()
 
   /** argmax-cosine assignment of `qc` codes against a (broadcast) centroid
     * table — a hash-aggregate max over struct(cos, -cid): same pick as
@@ -774,8 +705,8 @@ object Similarity {
     // pre-training action, and it is sample-sized, not corpus-sized (the
     // pre-fusion shape checkpointed the FULL corpus' codes here).
     val headCap = math.max(k.toLong, math.min(n, TrainCap.toLong))
-    val qcHead = staged("head-scan-ckpt")(
-      codesProj(s, src.filter(col("vec_id") < headCap)).localCheckpoint())
+    val qcHead =
+      codesProj(s, src.filter(col("vec_id") < headCap)).localCheckpoint()
     val qct = qcHead.filter(col("vec_id") < math.min(n, TrainCap.toLong))
     // WARM START (round-15 ask #5): `warm` carries the previous
     // generation's trained centroids. Lloyd then starts from a
@@ -820,7 +751,7 @@ object Similarity {
     // ranking, the census, frozen-model collection) silently REPLAYS
     // training — measured as q_ann_recall's residual 1.6 s/run even with
     // everything else frozen. K rows; checkpoint once with the model.
-    val cF = staged("lloyd-rounds-ckpt")(cFinal.localCheckpoint())
+    val cF = cFinal.localCheckpoint()
     // the ONE full-corpus pass: codes are computed INLINE in the
     // assignment scan (crossJoin against the broadcast centroids, then
     // the scalar max(struct) argmax — whole-stage-codegen throughout;
@@ -832,13 +763,13 @@ object Similarity {
     // the refresh, which re-derives it over the grown dir. The
     // checkpointed artifact shrinks to (vec_id, cid) — 16 B/row instead
     // of the 520 B/row code cache.
-    // WIDTH GUARD (round-18, found by the indexPassAB instrument): the
-    // fused pass inherits the SCAN's parallelism, and a replicated or
-    // dictionary-compressed corpus can pack millions of rows into one
-    // parquet split — the O(n·k) argmax then runs in ONE task (measured
-    // 12.9-17.7 s at the 30× dir vs 2.4-3.2 s repartitioned, a 5-6×
-    // win; the same hazard on a 100 TB cluster is a thousand idle
-    // executors). One explicit shuffle to cluster width — transient,
+    // WIDTH GUARD (round-18, measured by a fused vs repartitioned A/B of
+    // this pass, ivfab_r18.log): the fused pass inherits the SCAN's
+    // parallelism, and a replicated or dictionary-compressed corpus can
+    // pack millions of rows into one parquet split — the O(n·k) argmax
+    // then runs in ONE task (measured 12.9-17.7 s at the 30× dir vs
+    // 2.4-3.2 s repartitioned, a 5-6× win; the same hazard on a 100 TB
+    // cluster is a thousand idle executors). One explicit shuffle to cluster width — transient,
     // spillable, row-identical (the argmax agg is order-independent) —
     // only when the scan is narrower than the cluster.
     val qcFull = {
@@ -846,8 +777,7 @@ object Similarity {
       val width = s.sparkContext.defaultParallelism
       if (proj.rdd.getNumPartitions < width) proj.repartition(width) else proj
     }
-    val a2 = staged("fused-scan-assign-ckpt")(
-      assignAgainst(s, qcFull, cF).localCheckpoint())
+    val a2 = assignAgainst(s, qcFull, cF).localCheckpoint()
     val cosToCent = when(col("n2") === 0.0d || col("cn2") === 0.0d, lit(-2.0d))
       .otherwise(round(dotD(col("cd"), col("ccd")) / (sqrt(col("n2")) * sqrt(col("cn2"))), 6))
     IvfParts(codesProj(s, src), a2, cF, cosToCent)
@@ -1059,11 +989,11 @@ object Similarity {
           (sqrt(dot(col("qe"), col("qe"))) *
             sqrt(dot(col("cande"), col("cande")))), 6).as("score"))
     val wRank = Window.partitionBy("qid").orderBy(col("score").desc, col("cand_id").asc)
-    staged("probe-ckpt")(cscore.withColumn("rn", row_number().over(wRank))
+    cscore.withColumn("rn", row_number().over(wRank))
       .filter(col("rn") <= 3)
       .select(col("qid"), col("rn"), col("cand_id").as("vec_id"), col("score"))
       .orderBy("qid", "rn")
-      .localCheckpoint())
+      .localCheckpoint()
   }
 
   private def trainedPartsUncached(s: SparkSession, d: String,

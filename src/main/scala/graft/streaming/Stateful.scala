@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig,
-  TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode}
 
 /** Streaming state machines and event-time windows (SURVEY.md §2B
   * streaming rows). These are DataFrame→DataFrame transforms so tests
@@ -36,43 +35,6 @@ object Stateful {
           last.foreach(state.update)
           out.iterator
       }
-  }
-
-  /** The same checksum state machine on Spark 4's transformWithState
-    * (arbitrary-state v2): explicit named ValueState, RocksDB-backed.
-    * This is the forward-looking API — state schema evolves independently
-    * of the function, and TTL/timers are first-class. Requires
-    * spark.sql.streaming.stateStore.providerClass =
-    * ...state.RocksDBStateStoreProvider on the running query. */
-  class ChecksumProcessor extends StatefulProcessor[String, TableDigest, ChangeSignal] {
-    @transient private var last: ValueState[String] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      last = getHandle.getValueState("last", Encoders.STRING, TTLConfig.NONE)
-
-    override def handleInputRows(
-        table: String,
-        rows: Iterator[TableDigest],
-        timers: TimerValues): Iterator[ChangeSignal] = {
-      var prev = Option(last.get())
-      val out = rows.flatMap { d =>
-        val sig =
-          if (prev.contains(d.checksum)) None
-          else Some(ChangeSignal(table, prev, d.checksum))
-        prev = Some(d.checksum)
-        sig
-      }.toList
-      prev.foreach(last.update)
-      out.iterator
-    }
-  }
-
-  /** changeSignals on the transformWithState engine (see ChecksumProcessor). */
-  def changeSignalsTws(digests: Dataset[TableDigest]): Dataset[ChangeSignal] = {
-    import digests.sparkSession.implicits._
-    digests
-      .groupByKey(_.table)
-      .transformWithState(new ChecksumProcessor, TimeMode.None(), OutputMode.Append())
   }
 
   /** s_watermark_late: event-time tumbling counts with a 10-minute
@@ -319,64 +281,6 @@ object Stateful {
           state.update(n)
           Iterator.single(TokenCount(token, n))
       }
-  }
-
-  /** [[runningTokenCounts]] on Spark 4's transformWithState, exercising
-    * MAP STATE (round-13 ask #3's tail): the grouping key is a hash
-    * SHARD (64-way), and each shard's per-token counts live in one named
-    * MapState[token, count] — composite state under a coarse key instead
-    * of one grouping key per token. At the 10⁸-distinct-token scale this
-    * is what keeps the state-store key space and shuffle fan-out
-    * bounded: the shard count, not the vocabulary, is the key
-    * cardinality.
-    *
-    * TTL is injectable (`ttl`) but defaults to NONE, deliberately: a
-    * retention deployment passes TTLConfig(hours) + TimeMode
-    * .ProcessingTime + a real trigger interval, and stale tokens age
-    * out of the store — but processing-time TTL makes EVERY batch
-    * schedule a follow-up (processing time always advances, unlike a
-    * watermark), so under trigger(0)/AvailableNow the engine re-batches
-    * endlessly and a synchronous processAllAvailable test never settles
-    * (measured: 6,600+ empty micro-batches before the spec was killed).
-    * The spec therefore pins the NONE form; the TTL path differs only
-    * in the store's eviction bookkeeping, not in this processor's
-    * logic. */
-  class TokenShardProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, (Long, String), TokenCount] {
-    @transient private var counts: org.apache.spark.sql.streaming.MapState[String, Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      counts = getHandle.getMapState("counts", Encoders.STRING,
-        Encoders.scalaLong, ttl)
-
-    override def handleInputRows(shard: Long, rows: Iterator[(Long, String)],
-        timers: TimerValues): Iterator[TokenCount] = {
-      val batch = rows.foldLeft(Map.empty[String, Long]) { case (m, (_, t)) =>
-        m.updated(t, m.getOrElse(t, 0L) + 1L)
-      }
-      batch.toSeq.sortBy(_._1).map { case (tok, dn) =>
-        val n = (if (counts.containsKey(tok)) counts.getValue(tok) else 0L) + dn
-        counts.updateValue(tok, n)
-        TokenCount(tok, n)
-      }.iterator
-    }
-  }
-
-  /** [[runningTokenCounts]] through [[TokenShardProcessor]]. A non-NONE
-    * `ttl` switches the query to TimeMode.ProcessingTime (TTL's
-    * requirement); StatefulSpec's eviction case drives this form with a
-    * polling await — NEVER processAllAvailable, which the TTL
-    * follow-up batches starve (the Scaladoc spin gotcha above). */
-  def runningTokenCountsTws(tokens: Dataset[String],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[TokenCount] = {
-    import tokens.sparkSession.implicits._
-    val timeMode =
-      if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    tokens
-      .map(t => ((t.hashCode & 0x7fffffff).toLong % 64L, t))
-      .groupByKey(_._1)
-      .transformWithState(new TokenShardProcessor(ttl), timeMode,
-        OutputMode.Append())
   }
 
   final case class VecIn(vec_id: Long, embedding: Array[Float])
@@ -781,7 +685,7 @@ object Stateful {
     * and [[noveltyStream]] re-resolves the registry each tick, so an
     * append re-points the gate through the delta refresh and a rewrite
     * retrains); a deployment needing strict cross-batch ownership
-    * shards shingles into MapState (TokenShardProcessor's shape) at the
+    * keys shingles in state (runningTokenCounts' shape) at the
     * cost of a store that grows with the distinct-shingle space.
     * StatefulSpec pins one-batch parity against the batch member's live
     * leg and the intra-batch contention case. */
@@ -1462,54 +1366,6 @@ object Stateful {
       }
   }
 
-  /** [[concurrencyEvents]] on Spark 4's transformWithState (arbitrary-
-    * state v2) — the second gate on the forward-looking API after
-    * ChecksumProcessor, proving the migration recipe generalizes beyond
-    * a single-value state machine: the open session's (start, last) pair
-    * lives in one named ValueState with an explicit tuple encoder,
-    * RocksDB-backed, TTL-ready. StatefulSpec runs both engines over the
-    * same replay and asserts boundary-for-boundary equality. */
-  class ConcurrencyProcessor
-      extends StatefulProcessor[Long, ConcEvIn, ConcBoundary] {
-    @transient private var open: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      open = getHandle.getValueState("open",
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-    override def handleInputRows(
-        uid: Long,
-        rows: Iterator[ConcEvIn],
-        timers: TimerValues): Iterator[ConcBoundary] = {
-      var (start, last) = Option(open.get()).getOrElse((-1L, -1L))
-      val out = scala.collection.mutable.ArrayBuffer.empty[ConcBoundary]
-      rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-        if (start < 0L) {
-          out += ConcBoundary(uid, e.ts_us, 1, 1L)
-          start = e.ts_us; last = e.ts_us
-        } else if (e.ts_us - last > 1800000000L) {
-          out += ConcBoundary(uid, last + 1L, 0, -1L)
-          out += ConcBoundary(uid, e.ts_us, 1, 1L)
-          start = e.ts_us; last = e.ts_us
-        } else last = math.max(last, e.ts_us)
-      }
-      open.update((start, last))
-      out.iterator
-    }
-  }
-
-  /** concurrencyEvents on the transformWithState engine. */
-  def concurrencyEventsTws(events: DataFrame): Dataset[ConcBoundary] = {
-    val s = events.sparkSession
-    import s.implicits._
-    events
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
-      .as[ConcEvIn]
-      .groupByKey(_.user_id)
-      .transformWithState(new ConcurrencyProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
-
   /** s_session_window: native session windows, 30-minute gap per user —
     * the streaming twin of the batch gaps-and-islands in
     * graft.ops.Temporal.sessionize. */
@@ -1520,160 +1376,6 @@ object Stateful {
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("session_window.start").as("session_start"),
         col("n_events"))
-
-  final case class SessEvIn(user_id: Long, ts_us: Long)
-  final case class SessionOut(user_id: Long,
-      session_start: java.sql.Timestamp, n_events: Long)
-
-  /** Timer-driven session closing on transformWithState — the third tws
-    * port and the first to exercise the API's TIMERS (round-13 verdict
-    * ask #3; ChecksumProcessor and ConcurrencyProcessor use only
-    * ValueState). Where [[sessionCounts]]'s session_window aggregation
-    * closes sessions retroactively when the watermark overtakes them,
-    * here the state machine is explicit and forward-looking, and — since
-    * round 17 — CHURN-FREE. The first cut slid one timer per open
-    * session on every event (deleteTimer + registerTimer per touched
-    * user per batch); the StreamBench 10× rating showed that registry
-    * churn, not the state store (state_share collapsed to 0.106),
-    * capped the port at 36k rows/s vs the aggregation's 127k
-    * (BASELINE.md "TWS scaling point").
-    *
-    * The churn-free design keeps ONE outstanding alarm per key, stored
-    * as the fourth long of the open-session ValueState:
-    *   - an arriving event extends the session WITHOUT touching the
-    *     timer registry — if an alarm is already outstanding it covers
-    *     every session this key holds (the alarm was registered off an
-    *     older `last`, so it fires at or before any newer boundary's
-    *     bucket);
-    *   - an alarm is registered only when none is outstanding, at the
-    *     earliest unemitted gap boundary rounded UP to a 60 s bucket;
-    *   - [[handleExpiredTimer]] emits every session whose boundary the
-    *     watermark has crossed and re-registers once at the earliest
-    *     REMAINING boundary's bucket (a live session therefore re-arms
-    *     about once per gap-length of watermark progress, not once per
-    *     batch).
-    * Mid-batch gaps still park in the ListState; they ride the shared
-    * alarm instead of owning a timer. The bucket ceiling trades ≤60 s of
-    * event-time emission latency (content is bit-identical; only the
-    * emitting micro-batch can shift) for an O(fires) registry write
-    * rate. Merge rule matches session_window's half-open windows (merge
-    * iff next < last + gap, strictly). StatefulSpec replays one stream
-    * through both gates and asserts the emitted session sets are
-    * identical. */
-  class SessionProcessor
-      extends StatefulProcessor[Long, SessEvIn, SessionOut] {
-    private val GapUs = 1800000000L
-    private val BucketMs = 60000L
-    private def expiryMs(lastUs: Long): Long = lastUs / 1000L + 30L * 60L * 1000L
-    private def bucketCeil(ms: Long): Long =
-      ((ms + BucketMs - 1L) / BucketMs) * BucketMs
-    private def startTs(startUs: Long) = new java.sql.Timestamp(startUs / 1000L)
-
-    // open = (start_us, last_us, n_events, alarm_ms); alarm_ms is the
-    // timestamp of this key's single outstanding timer, 0 when none.
-    @transient private var open: ValueState[(Long, Long, Long, Long)] = _
-    @transient private var pending: ListState[(Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      open = getHandle.getValueState("open", Encoders.tuple(
-        Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaLong), TTLConfig.NONE)
-      pending = getHandle.getListState("pending", Encoders.tuple(
-        Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
-        TTLConfig.NONE)
-    }
-
-    override def handleInputRows(uid: Long, rows: Iterator[SessEvIn],
-        timers: TimerValues): Iterator[SessionOut] = {
-      val prev = Option(open.get())
-      val alarm = prev.map(_._4).getOrElse(0L)
-      var cur = prev.map(p => (p._1, p._2, p._3))
-      val parked = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      rows.toSeq.sortBy(_.ts_us).foreach { e =>
-        cur match {
-          case Some((start, last, n)) if e.ts_us - last < GapUs =>
-            cur = Some((start, math.max(last, e.ts_us), n + 1L))
-          case Some(closed) =>
-            // gap inside the batch: park — it emits when the WATERMARK
-            // passes its boundary, under the shared alarm
-            parked += closed
-            cur = Some((e.ts_us, e.ts_us, 1L))
-          case None =>
-            cur = Some((e.ts_us, e.ts_us, 1L))
-        }
-      }
-      parked.foreach(pending.appendValue)
-      cur.foreach { case (start, last, n) =>
-        val newAlarm =
-          if (alarm != 0L) alarm // outstanding timer already covers us
-          else {
-            // earliest unemitted boundary: the first parked session's if
-            // any (parked boundaries precede the open session's), else
-            // the open session's
-            val minLast = parked.headOption.map(_._2).getOrElse(last)
-            val t = bucketCeil(expiryMs(minLast))
-            getHandle.registerTimer(t)
-            t
-          }
-        open.update((start, last, n, newAlarm))
-      }
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(uid: Long, timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[SessionOut] = {
-      // emit against the CURRENT WATERMARK, not just the fired alarm's
-      // timestamp: the single shared alarm may sit far behind the
-      // watermark (it was armed off an old boundary), and one fire must
-      // drain every boundary the watermark has already crossed — exactly
-      // session_window's emission rule
-      val fired = math.max(info.getExpiryTimeInMs,
-        timers.getCurrentWatermarkInMs())
-      val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-      val keep = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      pending.get().foreach { case s @ (start, last, n) =>
-        if (expiryMs(last) <= fired) out += SessionOut(uid, startTs(start), n)
-        else keep += s
-      }
-      if (out.nonEmpty) {
-        pending.clear()
-        keep.foreach(pending.appendValue)
-      }
-      var openRemains: Option[(Long, Long, Long)] = None
-      Option(open.get()).foreach { case (start, last, n, _) =>
-        if (expiryMs(last) <= fired) out += SessionOut(uid, startTs(start), n)
-        else openRemains = Some((start, last, n))
-      }
-      // re-arm once at the earliest remaining boundary's bucket (strictly
-      // past `fired`, since everything due at `fired` just emitted)
-      val remaining = keep.map(s => expiryMs(s._2)) ++
-        openRemains.map(o => expiryMs(o._2))
-      if (remaining.nonEmpty) {
-        val next = bucketCeil(remaining.min)
-        getHandle.registerTimer(next)
-        openRemains match {
-          case Some((start, last, n)) => open.update((start, last, n, next))
-          // keep-only (parked boundaries always precede the open one, so
-          // this is defensive): the timer is armed but has no alarm slot;
-          // the next input batch re-arms, and a duplicate fire is a no-op
-          case None => open.clear()
-        }
-      } else open.clear()
-      out.iterator
-    }
-  }
-
-  /** [[sessionCounts]] re-expressed through [[SessionProcessor]]. */
-  def sessionCountsTws(events: DataFrame): Dataset[SessionOut] = {
-    val s = events.sparkSession
-    import s.implicits._
-    events
-      .withWatermark("ts", "10 minutes")
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us")).as[SessEvIn]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor, TimeMode.EventTime(),
-        OutputMode.Append())
-  }
 
   // -----------------------------------------------------------------------
   // s_stream_triangles: live graph-impact census over arriving trades

@@ -24,16 +24,15 @@ object StreamInventory {
   // format: off
   val pipelines: Seq[Entry] = Seq(
     Entry("s_poll_pipeline", "streaming/CdcPipeline.scala", "start", "drop→checksum→envelope→JSONL CDC poll loop (R5/R19/R21); consistent multi-table ticks via pollTickAll (R22)"),
-    Entry("s_session_timer", "streaming/Stateful.scala", "SessionProcessor", "timer-driven session closing on transformWithState; churn-free shared per-key alarm (60 s buckets) since r17; parity-spec'd against session_window"),
-    Entry("s_session_window", "streaming/Stateful.scala", "sessionCounts", "native session_window aggregation, 30-min gap — the production engine for high-key-churn session loads"),
-    Entry("s_stateful_checksum", "streaming/Stateful.scala", "changeSignals", "per-table checksum change detector (R18); tws twin changeSignalsTws/ChecksumProcessor"),
+    Entry("s_session_window", "streaming/Stateful.scala", "sessionCounts", "native session_window aggregation, 30-min gap per user"),
+    Entry("s_stateful_checksum", "streaming/Stateful.scala", "changeSignals", "per-table checksum change detector (R18)"),
     Entry("s_stream_admission", "streaming/Stateful.scala", "admissionStream", "refresh-aware exact-dedup admission gate vs the frozen dedup base"),
     Entry("s_stream_anomaly", "streaming/Stateful.scala", "anomalyGate", "per-hour rate anomaly gate vs the frozen hourly census"),
     Entry("s_stream_attribution", "streaming/Stateful.scala", "attributionGate", "at-ingest first/last-touch verdicts, bit-parity with q_attribution"),
     Entry("s_stream_audio", "ops/Multimodal.scala", "audioWindowsOn", "audio windowing over a stream (shared kernel with q_audio_windows)"),
     Entry("s_stream_bpe", "streaming/Stateful.scala", "bpeGate", "BPE tokenization at ingest against the frozen merge table"),
     Entry("s_stream_components", "streaming/Stateful.scala", "componentsStream", "incremental connected-components overlay state"),
-    Entry("s_stream_concurrency", "streaming/Stateful.scala", "concurrencyEvents", "live session-boundary +1/−1 events, two longs per user; tws twin ConcurrencyProcessor"),
+    Entry("s_stream_concurrency", "streaming/Stateful.scala", "concurrencyEvents", "live session-boundary +1/−1 events, two longs per user"),
     Entry("s_stream_containment", "streaming/Stateful.scala", "containmentStream", "engulfment verdicts vs the frozen containment base; mid-stream delta-refresh re-pointing"),
     Entry("s_stream_decontam", "streaming/Stateful.scala", "decontamGate", "frozen-model embedding-decontamination leak gate"),
     Entry("s_stream_dedup", "streaming/Stateful.scala", "dedupedStream", "dropDuplicatesWithinWatermark admission gate on event_id"),
@@ -52,7 +51,7 @@ object StreamInventory {
     Entry("s_stream_semdedup", "streaming/Stateful.scala", "semDedupCandidates", "IVF-cell semantic near-dup signals at ingest"),
     Entry("s_stream_substring", "streaming/Stateful.scala", "substringDupCandidates", "span-hash substring-dup candidates at ingest"),
     Entry("s_stream_tiles", "ops/Multimodal.scala", "imageTilesOn", "image tiling over a stream (shared kernel with q_image_tiles)"),
-    Entry("s_stream_topk", "streaming/Stateful.scala", "runningTokenCounts", "running token counts; tws twin TokenShardProcessor (64-way MapState shards, TTL injectable)"),
+    Entry("s_stream_topk", "streaming/Stateful.scala", "runningTokenCounts", "running token counts, one keyed long per token"),
     Entry("s_stream_triangles", "streaming/Stateful.scala", "triangleStream", "live triangle-impact census: overlay state over the frozen tri-base, q_triangles_delta's merge algebra + frac=4 flood routing to the bounded recount"),
     Entry("s_stream_twap", "streaming/Stateful.scala", "twapGate", "running LOCF TWAP integral, five longs of state per user"),
     Entry("s_stream_watermark", "streaming/Stateful.scala", "watermarkStream", "per-batch lateness census, O(1) carried high-water mark"),

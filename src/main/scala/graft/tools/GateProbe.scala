@@ -22,7 +22,7 @@ object GateProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Session.local(cpus.toInt, cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    // diagnosis knobs (the IvfProbe convention): separate codegen-compile
+    // diagnosis knobs: separate codegen-compile
     // cost from data cost in the cold-first-tick decomposition
     if (sys.env.get("GATE_PROBE_NO_WSC").contains("1"))
       spark.conf.set("spark.sql.codegen.wholeStage", "false")

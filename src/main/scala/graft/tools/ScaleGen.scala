@@ -112,6 +112,15 @@ object ScaleGen {
     shifted.drop("__rep")
   }
 
+  /** Part-file count for replicated tables: SPARK_GRAFT_SCALEGEN_FILES,
+    * default 32. A value that is not an integer fails naming the
+    * variable and the value. */
+  private[graft] def filesOf(env: Map[String, String]): Int =
+    env.get("SPARK_GRAFT_SCALEGEN_FILES").fold(32) { v =>
+      v.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_SCALEGEN_FILES must be an integer, got '$v'"))
+    }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: ScaleGen <srcSfDir> <outDir> [k] [hubFrac]")
@@ -132,7 +141,7 @@ object ScaleGen {
     // measures the plans, not the file layout. Round-robin repartition is
     // content-identical (sort-before-repartition keeps it deterministic);
     // the tiny enumerated dims (region, nation) stay single-file.
-    val nFiles = sys.env.getOrElse("SPARK_GRAFT_SCALEGEN_FILES", "32").toInt
+    val nFiles = filesOf(sys.env)
     graft.core.Tables.all.foreach { t =>
       val df = graft.core.Tables.table(spark, src, t)
       val scaled0 = replicate(spark, df, keyCols(t), bases, k, t, hubFrac)

@@ -28,13 +28,13 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   */
 object StreamBench {
   /** Modes: no args / `[K]` = the original CDC + dedup pair;
-    * `tws [K]` = rate the transformWithState ports against their
-    * fMGWS / native twins (round-15 ask #3); `fanout [K] [D]` = rate
-    * multi-table consistent ticks vs query-per-table (round-15 ask #6,
-    * R22's Spark disposition); `gates [K]` = rate the state-heavy
-    * ingest gates (round-16 ask #4). */
+    * `stateful [K]` = rate the keyed-state pipelines
+    * (s_stream_concurrency, s_stream_topk, s_session_window);
+    * `fanout [K] [D]` = rate multi-table consistent ticks vs
+    * query-per-table (round-15 ask #6, R22's Spark disposition);
+    * `gates [K]` = rate the state-heavy ingest gates (round-16 ask #4). */
   def main(args: Array[String]): Unit = args.headOption match {
-    case Some("tws") => twsMain(args.drop(1))
+    case Some("stateful") => statefulMain(args.drop(1))
     case Some("fanout") => fanoutMain(args.drop(1))
     case Some("gates") => gatesMain(args.drop(1))
     case Some("longrun") => longrunMain(args.drop(1))
@@ -95,8 +95,8 @@ object StreamBench {
     * as spec'd-but-unrated (ask #4): s_stream_containment,
     * s_stream_novelty (frozen-artifact admission gates over arriving
     * document batches) and s_stream_triangles (overlay-state graph-impact
-    * census over arriving trade pairs). Same drops protocol as the tws
-    * mode: K contiguous id slices, one file per drop,
+    * census over arriving trade pairs). Same drops protocol as the
+    * stateful mode: K contiguous id slices, one file per drop,
     * maxFilesPerTrigger=1, count sink. The frozen artifacts
     * (containment-base, novelty-base, tri-base) are built BEFORE the
     * stream starts — their cost prints as its own model_build line, so
@@ -348,7 +348,7 @@ object StreamBench {
     (0 until k).foreach { i =>
       val a = lo + span * i / k
       val b = if (i == k - 1) hi + 1 else lo + span * (i + 1) / k
-      val stage = s"$work/twsstage$i"
+      val stage = s"$work/stage$i"
       val slice = df.filter(col(idCol) >= a && col(idCol) < b)
       total += slice.count()
       slice.coalesce(1).write.mode("overwrite").parquet(stage)
@@ -396,28 +396,23 @@ object StreamBench {
     emit(s"""{"metric":"$metric","engine":"$engine","drops":$drops,"rows_in":$rowsIn,"wall_sec":${fmt(sec)},"rows_per_sec":${fmt(rowsIn / sec)},"batch_ms_p50":${fmt(pct(trig, 0.5))},"batch_ms_p99":${fmt(pct(trig, 0.99))},"state_task_ms_p50":${fmt(pct(st, 0.5))},"state_share":${BigDecimal(share).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"sf":"$sfDir"}""")
   }
 
-  private val RocksDb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Rate the transformWithState ports (round-15 ask #3) against their
-    * fMGWS / native twins on the SAME drops protocol as cdcMain: K
-    * contiguous event-id slices of the sf events table (the stream in
-    * arrival order) and K doc-id slices of the documents token stream,
-    * one file per drop, maxFilesPerTrigger=1, 50 ms trigger, foreachBatch
-    * count sink. TWS queries run on RocksDB (the API's requirement);
-    * fMGWS twins run on the default HDFS-backed store (their production
-    * shape) — the state_share column separates store cost from
-    * shuffle/compute either way. ChecksumProcessor is deliberately NOT
-    * rated: its input is one digest row per table per tick — rating it
-    * measures the harness, not the engine. */
-  private def twsMain(args: Array[String]): Unit = {
+  /** Rate the keyed-state pipelines on the SAME drops protocol as
+    * cdcMain: K contiguous event-id slices of the sf events table (the
+    * stream in arrival order) and K doc-id slices of the documents token
+    * stream, one file per drop, maxFilesPerTrigger=1, 50 ms trigger,
+    * foreachBatch count sink, default HDFS-backed state store — the
+    * state_share column separates store cost from shuffle/compute.
+    * changeSignals is deliberately NOT rated: its input is one digest
+    * row per table per tick — rating it measures the harness, not the
+    * engine. */
+  private def statefulMain(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val drops = if (args.nonEmpty) args(0).toInt else 10
     val spark = graft.core.Session.local(cpus.toInt, cpus.toInt)
     import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")
-    val work = Files.createTempDirectory("graft-twsbench").toString
+    val work = Files.createTempDirectory("graft-statefulbench").toString
 
     val ev = graft.core.Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("ts"))
@@ -434,52 +429,26 @@ object StreamBench {
       .option("maxFilesPerTrigger", 1).parquet(s"$work/tok")
       .select(col("token")).as[String]
 
-    def sinkCount(ds: org.apache.spark.sql.DataFrame, ckpt: String,
-        mode: String = "append") =
-      ds.writeStream.outputMode(mode)
+    def sinkCount(ds: org.apache.spark.sql.DataFrame, ckpt: String) =
+      ds.writeStream.outputMode("append")
         .option("checkpointLocation", s"$work/$ckpt")
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           b.count(); ()
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(50L))
 
-    def withRocks[T](body: => T): T = {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDb)
-      try body
-      finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-
     rateQuery("s_stream_concurrency", "fmgws-hdfs", drops, evRows, sfDir, cpus.toInt) {
       sinkCount(graft.streaming.Stateful.concurrencyEvents(evStream).toDF(),
         "c1").start()
-    }
-    withRocks {
-      rateQuery("s_stream_concurrency", "tws-rocksdb", drops, evRows, sfDir, cpus.toInt) {
-        sinkCount(graft.streaming.Stateful.concurrencyEventsTws(evStream).toDF(),
-          "c2").start()
-      }
     }
     rateQuery("s_stream_topk", "fmgws-hdfs", drops, tokRows, sfDir, cpus.toInt) {
       sinkCount(graft.streaming.Stateful.runningTokenCounts(tokStream).toDF(),
         "t1").start()
     }
-    withRocks {
-      rateQuery("s_stream_topk", "tws-rocksdb", drops, tokRows, sfDir, cpus.toInt) {
-        sinkCount(graft.streaming.Stateful.runningTokenCountsTws(tokStream).toDF(),
-          "t2").start()
-      }
-    }
     rateQuery("s_session_window", "native-agg-hdfs", drops, evRows, sfDir, cpus.toInt) {
       sinkCount(graft.streaming.Stateful.sessionCounts(
           evStream.select(col("user_id"), col("ts"))),
         "s1").start()
-    }
-    withRocks {
-      rateQuery("s_session_timer", "tws-rocksdb", drops, evRows, sfDir, cpus.toInt) {
-        sinkCount(graft.streaming.Stateful.sessionCountsTws(
-            evStream.select(col("user_id"), col("ts"))).toDF(),
-          "s2").start()
-      }
     }
     spark.stop()
   }

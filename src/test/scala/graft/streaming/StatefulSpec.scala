@@ -29,33 +29,16 @@ class StatefulSpec extends SparkSuite {
     in.addData(TableDigest("users", "c2"),       // change → emit
                TableDigest("orders", "z1"))      // new table bootstrap → emit
     q.processAllAvailable()
+    in.addData(TableDigest("users", "c2"),       // unchanged, then change
+               TableDigest("users", "c3"))       // in one batch → one emit
+    q.processAllAvailable()
     val rows = spark.table("signals").as[Stateful.ChangeSignal].collect()
     q.stop()
-    assert(rows.length == 3)
+    assert(rows.length == 4)
     assert(rows.exists(r => r.table == "users" && r.previous.isEmpty && r.current == "c1"))
     assert(rows.exists(r => r.table == "users" && r.previous.contains("c1") && r.current == "c2"))
     assert(rows.exists(r => r.table == "orders" && r.previous.isEmpty && r.current == "z1"))
-  }
-
-  test("s_stateful_checksum (transformWithState): same semantics on RocksDB state") {
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[TableDigest]
-      val q = Stateful.changeSignalsTws(in.toDS())
-        .writeStream.format("memory").queryName("signals_tws")
-        .outputMode(OutputMode.Append).start()
-      in.addData(TableDigest("users", "c1"))
-      q.processAllAvailable()
-      in.addData(TableDigest("users", "c1"), TableDigest("users", "c2"))
-      q.processAllAvailable()
-      val rows = spark.table("signals_tws").as[Stateful.ChangeSignal].collect()
-      q.stop()
-      assert(rows.length == 2)
-      assert(rows.exists(r => r.previous.isEmpty && r.current == "c1"))
-      assert(rows.exists(r => r.previous.contains("c1") && r.current == "c2"))
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    assert(rows.exists(r => r.table == "users" && r.previous.contains("c2") && r.current == "c3"))
   }
 
   test("s_watermark_late: closed windows emit; late rows beyond watermark drop") {
@@ -238,83 +221,6 @@ class StatefulSpec extends SparkSuite {
     assert(latest == Map("a" -> 3L, "b" -> 1L, "c" -> 1L))
     // batch-1 emission for 'a' was the then-current 2 (cross-batch state held)
     assert(rows.filter(_.token == "a").map(_.n).sorted.toSeq == Seq(2L, 3L))
-  }
-
-  test("s_stream_topk (transformWithState): MapState-sharded counts match the per-token fMGWS gate on RocksDB") {
-    // the MapState port: 64-way hash shards as grouping keys, each
-    // shard's vocabulary in one MapState — emission parity (per touched
-    // token per batch, cumulative count) with the one-key-per-token
-    // ValueState form across micro-batch boundaries (TTL stays NONE in
-    // the spec'd form: see TokenShardProcessor's Scaladoc for why
-    // processing-time TTL cannot settle under a synchronous test)
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[String]
-      val q = Stateful.runningTokenCountsTws(in.toDS())
-        .writeStream.format("memory").queryName("tok_counts_tws")
-        .outputMode(OutputMode.Append).start()
-      in.addData("a", "b", "a")
-      q.processAllAvailable()
-      in.addData("a", "c", "b")
-      q.processAllAvailable()
-      val rows = spark.table("tok_counts_tws").as[Stateful.TokenCount].collect()
-      q.stop()
-      // identical emission contract as the s_stream_topk case above:
-      // cumulative per touched token per batch, state held across batches
-      val latest = rows.groupBy(_.token).map { case (t, rs) => t -> rs.map(_.n).max }
-      assert(latest == Map("a" -> 3L, "b" -> 2L, "c" -> 1L))
-      assert(rows.filter(_.token == "a").map(_.n).sorted.toSeq == Seq(2L, 3L),
-        "cross-batch MapState must hold the running count")
-      assert(rows.filter(_.token == "b").map(_.n).sorted.toSeq == Seq(1L, 2L))
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("TokenShardProcessor TTL: expired MapState is not read back — the count restarts") {
-    // Round-14 verdict #8: the TTL path was injectable but never
-    // exercised (processing-time TTL schedules a follow-up batch after
-    // EVERY batch, so a synchronous processAllAvailable never settles —
-    // 6,600+ empty micro-batches measured before the spec was killed).
-    // The workable offline protocol: drive the query on a real trigger
-    // and await the SINK with a timeout poll, never the scheduler. The
-    // assertion is one-sided by design, so it cannot flake slow: state
-    // written in batch 1 is re-read ≥1.5 s later against a 500 ms TTL —
-    // a slower machine only widens the gap past the horizon. (The
-    // fresh-state-survives direction lives in the TTL-NONE case above.)
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[String]
-      val q = Stateful.runningTokenCountsTws(in.toDS(),
-          org.apache.spark.sql.streaming.TTLConfig(
-            java.time.Duration.ofMillis(500)))
-        .writeStream.format("memory").queryName("tok_ttl")
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100L))
-        .start()
-      def awaitRows(want: Int): Array[Stateful.TokenCount] = {
-        val t0 = System.currentTimeMillis
-        var rows = spark.table("tok_ttl").as[Stateful.TokenCount].collect()
-        while (rows.length < want && System.currentTimeMillis - t0 < 60000) {
-          Thread.sleep(50)
-          rows = spark.table("tok_ttl").as[Stateful.TokenCount].collect()
-        }
-        assert(rows.length >= want,
-          s"sink never reached $want rows: ${rows.mkString(",")}")
-        rows
-      }
-      in.addData("x", "y")
-      val first = awaitRows(2)
-      assert(first.filter(_.token == "x").map(_.n).toSeq == Seq(1L))
-      Thread.sleep(1500) // push the 500 ms TTL horizon past batch 1's write
-      in.addData("x")
-      val rows = awaitRows(3)
-      q.stop()
-      assert(rows.filter(_.token == "x").map(_.n).sorted.toSeq == Seq(1L, 1L),
-        "the second x batch must restart at 1 — expired state must not be read")
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("s_stream_semdedup: signal parity with batch q_semdedup on a clone-structured drop") {
@@ -1670,47 +1576,12 @@ class StatefulSpec extends SparkSuite {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(next == Seq(("a", 1L, 1L, 5L)), s"post-retry batch census: $next")
   }
-  test("s_stream_concurrency (transformWithState): boundary-for-boundary parity with the fMGWS gate on RocksDB") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.{col, unix_micros}
-    val sf = "/root/testdata/sf0.001"
-    val ev = graft.core.Tables.events(spark, sf)
-      .select(col("event_id"), col("user_id"), col("ts"),
-        unix_micros(col("ts")).as("us"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2), r.getLong(3)))
-      .sortBy(e => (e._4, e._1))
-    val (b1, b2) = ev.splitAt(ev.length / 2)
-    def runGate(name: String,
-        gate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[Stateful.ConcBoundary])
-        : Seq[(Long, Long, Int, Long)] = {
-      val in = MemoryStream[(Long, Long, Timestamp)]
-      val q = gate(in.toDS().toDF("event_id", "user_id", "ts"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-      in.addData(b1.map(e => (e._1, e._2, e._3)).toSeq); q.processAllAvailable()
-      in.addData(b2.map(e => (e._1, e._2, e._3)).toSeq); q.processAllAvailable()
-      val out = spark.table(name).as[Stateful.ConcBoundary].collect()
-        .map(b => (b.user_id, b.ts, b.kind, b.delta)).sorted.toSeq
-      q.stop()
-      out
-    }
-    val classic = runGate("conc_fmgws", Stateful.concurrencyEvents)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val tws =
-      try runGate("conc_tws", Stateful.concurrencyEventsTws)
-      finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    assert(classic.nonEmpty && classic == tws,
-      s"engines diverged: fMGWS ${classic.size} boundaries, tws ${tws.size}")
-  }
-  test("s_session_timer (transformWithState TIMERS): session-for-session parity with session_window") {
-    // Round-13 ask #3: the first tws port exercising registerTimer —
-    // sessions close when the gap timer fires (watermark crosses
-    // last + 30 min), not retroactively inside an aggregation. Both
-    // gates replay the same three-batch stream; a far-future sentinel
-    // user advances the watermark so every real session closes; the
-    // emitted (user, start, n) sets must be identical.
+  test("s_session_window: replay equals a 30-minute gap split") {
+    // sessions close when the watermark crosses last + 30 min, not on
+    // the next event. The gate replays a three-batch stream; a
+    // far-future sentinel user advances the watermark so every real
+    // session closes; the emitted (user, start, n) set must equal a
+    // gap split of the same events computed over the collected rows.
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.{col, unix_micros}
     val sf = "/root/testdata/sf0.001"
@@ -1724,37 +1595,36 @@ class StatefulSpec extends SparkSuite {
       new Timestamp(ev.last._2.getTime + 7L * 24 * 3600 * 1000), 0L)
     val (b1, rest) = ev.splitAt(ev.length / 3)
     val (b2, b3) = rest.splitAt(rest.length / 2)
-    def runGate(name: String,
-        gate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-        : Seq[(Long, Long, Long)] = {
-      val in = MemoryStream[(Long, Timestamp)]
-      val q = gate(in.toDS().toDF("user_id", "ts"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-      Seq(b1.toSeq, b2.toSeq, b3.toSeq, Seq(sentinel)).foreach { b =>
-        in.addData(b.map(e => (e._1, e._2))); q.processAllAvailable()
-      }
-      // one more empty pass: emissions land in the batch AFTER the
-      // watermark advance that the sentinel caused
-      in.addData(Seq.empty[(Long, Timestamp)]); q.processAllAvailable()
-      val out = spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getLong(2)))
-        .filter(_._1 != sentinelUser).sorted.toSeq
-      q.stop()
-      out
+    val in = MemoryStream[(Long, Timestamp)]
+    val q = Stateful.sessionCounts(in.toDS().toDF("user_id", "ts"))
+      .writeStream.format("memory").queryName("sess_window")
+      .outputMode(OutputMode.Append).start()
+    Seq(b1.toSeq, b2.toSeq, b3.toSeq, Seq(sentinel)).foreach { b =>
+      in.addData(b.map(e => (e._1, e._2))); q.processAllAvailable()
     }
-    val classic = runGate("sess_window", Stateful.sessionCounts)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val timered =
-      try runGate("sess_tws_timer", df => Stateful.sessionCountsTws(df).toDF())
-      finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    assert(classic.nonEmpty, "fixture must close at least one session")
-    assert(classic == timered,
-      s"engines diverged: session_window ${classic.size} sessions, timer ${timered.size}")
-    // the timer path must have emitted MULTIPLE sessions for some user
-    // (proves mid-stream closes, not just the sentinel flush)
-    assert(timered.groupBy(_._1).exists(_._2.size > 1),
+    // one more empty pass: emissions land in the batch AFTER the
+    // watermark advance that the sentinel caused
+    in.addData(Seq.empty[(Long, Timestamp)]); q.processAllAvailable()
+    val streamed = spark.table("sess_window").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getLong(2)))
+      .filter(_._1 != sentinelUser).sorted.toSeq
+    q.stop()
+    // the reference split: a new session starts when an event lands more
+    // than 30 minutes after the user's previous event
+    val expected = ev.groupBy(_._1).toSeq.flatMap { case (uid, es) =>
+      val sorted = es.sortBy(_._3)
+      val starts = sorted.indices.filter(i =>
+        i == 0 || sorted(i)._3 - sorted(i - 1)._3 > 1800000000L)
+      starts.zip(starts.drop(1) :+ sorted.length).map { case (i, j) =>
+        (uid, sorted(i)._2.getTime, (j - i).toLong)
+      }
+    }.sorted
+    assert(streamed.nonEmpty, "fixture must close at least one session")
+    assert(streamed == expected,
+      s"session_window ${streamed.size} sessions, gap split ${expected.size}")
+    // some user must close MULTIPLE sessions (proves mid-stream closes,
+    // not just the sentinel flush)
+    assert(streamed.groupBy(_._1).exists(_._2.size > 1),
       "fixture must produce multiple sessions per user")
   }
 
