@@ -1,9 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Canonical => C}
 
@@ -41,16 +49,29 @@ object CdcPipeline {
     * ("SPARK_JOB_CANCELLED ... was stopped"). Recognized structurally
     * because the raising thread can differ from the stream thread (async
     * write commit), in which case StreamExecution's own interruption
-    * check misses it and a clean stop reads as a stream failure. */
+    * check misses it and a clean stop reads as a stream failure.
+    *
+    * stop() can also reach a task mid-write before the job is cancelled:
+    * the writer sees the interrupt (or the task kill) as an I/O failure
+    * and the job fails with TASK_WRITE_FAILED instead. An interrupt or
+    * task kill UNDER a write failure is therefore a stop too; a write
+    * failure with any other cause is a real failure. */
   private[streaming] def isStopCancellation(t: Throwable): Boolean = {
     var c: Throwable = t
     var depth = 0
+    var underWriteFailure = false
     while (c != null && depth < 16) {
       c match {
         case se: org.apache.spark.SparkException
             if se.getMessage != null &&
               se.getMessage.contains("SPARK_JOB_CANCELLED") &&
               se.getMessage.contains("was stopped") => return true
+        case se: org.apache.spark.SparkException
+            if se.getMessage != null && se.getMessage.contains("TASK_WRITE_FAILED") =>
+          underWriteFailure = true
+        case _: InterruptedException | _: java.io.InterruptedIOException |
+            _: java.nio.channels.ClosedByInterruptException |
+            _: org.apache.spark.TaskKilledException if underWriteFailure => return true
         case _ =>
       }
       c = if (c.getCause eq c) null else c.getCause
@@ -101,8 +122,10 @@ object CdcPipeline {
         * drops a column mid-stream is captured under its OWN schema
         * instead of being read through the stale stream schema — under
         * which an added column is invisible, so an identical-rows drop
-        * would not even register as a change. Costs one footer read per
-        * batch for parquet (JSON/CSV re-infer by scan). */
+        * would not even register as a change. For parquet this costs a
+        * driver-side footer read per batch file and no Spark job (the
+        * batch's file names ride along in the checksum aggregate); JSON
+        * and CSV re-infer by scan. Only the `start` stream reprobes. */
       reprobeSchema: Boolean = true,
       /** "snapshot" (reference-faithful full re-capture) or "diff":
         * row-level INSERT/UPDATE/DELETE envelopes against the previous
@@ -136,13 +159,26 @@ object CdcPipeline {
     * tables, so doubles keep full precision — a sub-0.01 change is
     * detected and huge magnitudes can't overflow (the money-grid
     * DECIMAL(18,2) form is reserved for oracle-compared queries). */
-  def batchChecksum(df: DataFrame): String = {
-    val row = df
-      .agg(count(lit(1)).cast(StringType).as("cnt"),
-        coalesce(sum(C.rowDigestExact(df)), lit(0L)).cast(StringType).as("dig"))
-      .select(md5(concat_ws(",", col("cnt"), col("dig"))).as("checksum"))
+  def batchChecksum(df: DataFrame): String =
+    df.agg(rowCount, digestSum(df)).select(checksumOf).head().getString(0)
+
+  private val rowCount = count(lit(1)).cast(StringType).as("cnt")
+  private def digestSum(df: DataFrame): Column =
+    coalesce(sum(C.rowDigestExact(df)), lit(0L)).cast(StringType).as("dig")
+  private val checksumOf = md5(concat_ws(",", col("cnt"), col("dig"))).as("checksum")
+
+  /** [[batchChecksum]] of a file-source batch, its row count, and the
+    * files it was read from, in ONE aggregate job (the reprobe needs the
+    * files; a separate distinct-files job would cost a job per tick).
+    * input_file_name() is nondeterministic, which Spark rejects inside an
+    * aggregate, so it is projected first; the digest still covers only
+    * the batch's own columns, so the checksum equals batchChecksum's. */
+  private def checksumWithFiles(batch: DataFrame): (String, Long, Seq[String]) = {
+    val r = batch.withColumn("__graft_file", input_file_name())
+      .agg(rowCount, digestSum(batch), collect_set(col("__graft_file")).as("files"))
+      .select(checksumOf, col("cnt"), col("files"))
       .head()
-    row.getString(0)
+    (r.getString(0), r.getString(1).toLong, r.getSeq[String](2).filter(_.nonEmpty))
   }
 
   /** Scale path for change detection: one digest per horizontal bucket
@@ -186,42 +222,98 @@ object CdcPipeline {
   private def tableMetaDir(metadataDir: String, table: String): String =
     s"$metadataDir/table_name=$table"
 
+  /** A committed file: not a hidden or commit-protocol file. */
+  private def isCommitted(s: org.apache.hadoop.fs.FileStatus): Boolean = s.isFile && {
+    val n = s.getPath.getName
+    !n.startsWith("_") && !n.startsWith(".")
+  }
+
+  /** A committed ledger file as (name, length, modification time). */
+  private type LedgerFile = (String, Long, Long)
+
+  /** The committed part files of a table's ledger dir, or None when the
+    * dir does not exist. Existence via the Hadoop FileSystem of the path —
+    * java.nio would be driver-local only and always-false for s3a://,
+    * hdfs://, etc., silently turning every tick into a full re-capture. */
+  private def ledgerFiles(spark: SparkSession, dir: String): Option[Set[LedgerFile]] = {
+    val hPath = new Path(dir)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(hPath)) None
+    else Some(fs.listStatus(hPath).iterator.filter(isCommitted)
+      .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toSet)
+  }
+
   /** Latest stored checksum for a table, or None on bootstrap (mirrors the
-    * reference's sql.ErrNoRows branch, duckdb_cdc.go:196-197). */
+    * reference's sql.ErrNoRows branch, duckdb_cdc.go:196-197). Always
+    * reads disk. The pipeline's own ticks read the ledger through a memo
+    * of the head this JVM last read or wrote, trusted only while the
+    * ledger's committed-file listing is unchanged (see [[ledgerView]]). */
   def lastChecksum(spark: SparkSession, metadataDir: String, table: String): Option[String] = {
     val dir = tableMetaDir(metadataDir, table)
-    // Existence via the Hadoop FileSystem of the path — java.nio would be
-    // driver-local only and always-false for s3a://, hdfs://, etc.,
-    // silently turning every tick into a full re-capture.
-    val hPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return None
     // A crash (or stop) can interrupt recordChecksum mid-write, leaving the
     // dir holding only _temporary — zero committed part files. Reading that
     // throws UNABLE_TO_INFER_SCHEMA and would kill every restart tick, so
     // treat it as "no checksum recorded": capture-then-record ordering plus
     // per-batch overwrite + pinned tick timestamps make the re-capture that
     // follows byte-identical idempotence, exactly the crash-replay contract.
-    val committed = fs.listStatus(hPath).exists(s => s.isFile && {
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    })
-    if (!committed) return None
+    if (ledgerFiles(spark, dir).forall(_.isEmpty)) None
+    else readLedger(spark, dir).map(_._1)
+  }
+
+  /** The head row of a ledger dir holding committed files:
+    * (max_by(checksum, ts), max(ts) in epoch millis). */
+  private def readLedger(spark: SparkSession, dir: String): Option[(String, Long)] = {
     val meta = spark.read.parquet(dir)
     if (meta.isEmpty) None
-    else meta.agg(max_by(col("checksum"), col("ts")).as("checksum"))
+    else meta.agg(max_by(col("checksum"), col("ts")).as("checksum"),
+        unix_millis(max(col("ts"))))
       .head() match {
         case r if r.isNullAt(0) => None
-        case r                  => Some(r.getString(0))
+        case r                  => Some((r.getString(0), r.getLong(1)))
       }
   }
 
-  private def recordChecksum(
-      spark: SparkSession, metadataDir: String, table: String, checksum: String): Unit = {
+  /** A ledger as a tick saw it: its committed files (None: no dir yet)
+    * and their head row (checksum, ts millis). */
+  private final case class LedgerView(files: Option[Set[LedgerFile]],
+      head: Option[(String, Long)])
+
+  /** Per table ledger dir, the view this JVM last read or wrote. */
+  private val ledgerMemo = new ConcurrentHashMap[String, LedgerView]()
+
+  /** The ledger's current view. The listing is taken on every call; the
+    * memo answers only when it matches exactly, so a restart, another
+    * writer or a replaced file falls back to the disk read. */
+  private def ledgerView(spark: SparkSession, metadataDir: String, table: String): LedgerView = {
+    val dir = tableMetaDir(metadataDir, table)
+    val files = ledgerFiles(spark, dir)
+    if (files.forall(_.isEmpty)) LedgerView(files, None)
+    else Option(ledgerMemo.get(dir)).filter(_.files == files).getOrElse {
+      val view = LedgerView(files, readLedger(spark, dir))
+      ledgerMemo.put(dir, view)
+      view
+    }
+  }
+
+  /** Append `checksum` to the ledger `seen` at the start of the tick. The
+    * memo advances only when this append's file is the only change since
+    * and its row is the new head (no row is later); otherwise — another
+    * writer appended meanwhile, or a row's clock ran ahead — it is
+    * dropped and the next tick reads disk. */
+  private def recordChecksum(spark: SparkSession, metadataDir: String, table: String,
+      checksum: String, seen: LedgerView): Unit = {
     import spark.implicits._
-    Seq((checksum, new java.sql.Timestamp(System.currentTimeMillis())))
+    val dir = tableMetaDir(metadataDir, table)
+    val now = System.currentTimeMillis()
+    Seq((checksum, new java.sql.Timestamp(now)))
       .toDF("checksum", "ts")
-      .write.mode("append").parquet(tableMetaDir(metadataDir, table))
+      .write.mode("append").parquet(dir)
+    val prior = seen.files.getOrElse(Set.empty)
+    val after = ledgerFiles(spark, dir)
+    if (after.exists(a => prior.subsetOf(a) && a.size == prior.size + 1) &&
+      seen.head.forall(_._2 <= now))
+      ledgerMemo.put(dir, LedgerView(after, Some((checksum, now))))
+    else ledgerMemo.remove(dir)
   }
 
   /** Diff-mode state: one row per key — the key columns, a full-width
@@ -250,28 +342,45 @@ object CdcPipeline {
   private def diffStateDir(cfg: Config): String =
     s"${cfg.metadataDir}/state/table_name=${cfg.tableName}"
 
-  /** Latest committed diff-state version, or None on bootstrap. Versions
-    * are `v=<n>` subdirectories: a crash between envelope write and state
-    * write leaves the old version intact (at-least-once, like the
-    * snapshot path), and re-running a version overwrites idempotently.
-    * A version holding zero committed part files (a crash mid-state-write
-    * left only `_temporary`) is NOT a version: reporting it would make the
-    * next run read it as `prev` and die on UNABLE_TO_INFER_SCHEMA — the
-    * same torn-write wedge lastChecksum guards against. Skipping it makes
-    * the next run re-diff against the last intact state and overwrite the
-    * debris when its number comes up again. */
-  private def stateVersions(spark: SparkSession, cfg: Config): Seq[Long] = {
-    val hPath = new org.apache.hadoop.fs.Path(diffStateDir(cfg))
+  private val VersionDir = "v=(\\d+)".r
+
+  /** Newest committed diff-state version below `below`, or None on
+    * bootstrap. Versions are `v=<n>` subdirectories: a crash between
+    * envelope write and state write leaves the old version intact
+    * (at-least-once, like the snapshot path), and re-running a version
+    * overwrites idempotently. A version holding zero committed part files
+    * (a crash mid-state-write left only `_temporary`) is NOT a version:
+    * reporting it would make the next run read it as `prev` and die on
+    * UNABLE_TO_INFER_SCHEMA — the same torn-write wedge lastChecksum
+    * guards against. Skipping it makes the next run re-diff against the
+    * last intact state and overwrite the debris when its number comes up
+    * again. One listing of the version names, then committed-ness probed
+    * from the newest down: a listing or two per tick however many
+    * versions have accreted. */
+  private def latestVersion(spark: SparkSession, dir: String,
+      below: Long = Long.MaxValue): Option[Long] = {
+    val hPath = new Path(dir)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return Seq.empty
-    fs.listStatus(hPath).toSeq
-      .filter(_.isDirectory)
-      .filter(d => fs.listStatus(d.getPath).exists(s => s.isFile && {
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }))
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v=") => n.drop(2).toLong }
+    if (!fs.exists(hPath)) return None
+    fs.listStatus(hPath).iterator.filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case VersionDir(n) => n.toLong }
+      .filter(_ < below).toSeq.sorted.reverseIterator
+      .find(v => fs.listStatus(new Path(hPath, s"v=$v")).exists(isCommitted))
+  }
+
+  /** Per diff-state dir: the newest version this JVM wrote and its
+    * schema, so reading it back as the next tick's `prev` needs no
+    * schema-inference job. One entry per dir. */
+  private val stateSchemas = new ConcurrentHashMap[String, (Long, StructType)]()
+
+  /** State version `v` of `dir`; under the recorded schema when this JVM
+    * wrote that version (the file source reads it back as nullable, as
+    * inference would), else inferred — e.g. after a restart. */
+  private def readState(spark: SparkSession, dir: String, v: Long): DataFrame = {
+    val reader = spark.read
+    Option(stateSchemas.get(dir)).collect { case (`v`, schema) => schema }
+      .foreach(reader.schema)
+    reader.parquet(s"$dir/v=$v")
   }
 
   /** Row-level INSERT/UPDATE/DELETE envelopes between two keyed states —
@@ -304,8 +413,9 @@ object CdcPipeline {
   }
 
   /** One poll tick over an already-materialized batch: detect + capture +
-    * record. Factored out of the stream so batch tests (and batch
-    * backfills) run the identical code path. Returns true if a change was
+    * record. The stream runs the same detect + capture + record path,
+    * with the checksum taken by its reprobe; batch tests and backfills
+    * call this directly and never reprobe. Returns true if a change was
     * captured.
     *
     * `captureEmpty`: an empty batch is ambiguous in the streaming path
@@ -319,50 +429,59 @@ object CdcPipeline {
       epoch: Option[Long] = None,
       captureTs: Option[java.sql.Timestamp] = None): Boolean = {
     if (!captureEmpty && batch.isEmpty) return false
-    val current = batchChecksum(batch)
-    val changed = !lastChecksum(spark, cfg.metadataDir, cfg.tableName).contains(current)
-    if (changed) {
-      val tsCol = captureTs.map(t => lit(t)).getOrElse(current_timestamp())
-      // Capture-then-record, the reference's ordering (B5). With a
-      // batchId (streaming path) the capture lands in a per-batch dir
-      // written with overwrite — re-running a batch after a crash
-      // replaces rather than duplicates its output, upgrading the
-      // reference's at-least-once floor to idempotent capture. (The
-      // reference instead TRUNCATES on same-second filenames — bug B2.)
-      val (envelopeDf, stateCommit) =
-        if (cfg.mode == "diff") {
-          require(cfg.keyCols.nonEmpty, "diff mode requires keyCols")
-          val vs = stateVersions(spark, cfg)
-          // state version = batchId; a crashed run that wrote v=id but not
-          // its checksum re-diffs against the version BELOW id, so the
-          // re-run reproduces (not empties) the envelope set
-          val v = batchId.getOrElse(vs.maxOption.map(_ + 1).getOrElse(0L))
-          val cur = keyedState(batch, cfg.keyCols)
-          val prev = vs.filter(_ < v).maxOption match {
-            case Some(pv) => spark.read.parquet(s"${diffStateDir(cfg)}/v=$pv")
-            case None => spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cur.schema)
-          }
-          val d = diffEnvelopes(prev, cur, cfg.keyCols, cfg.tableName, tsCol)
-          // envelope write happens below, BEFORE the state advance: a
-          // crash between the two re-runs the diff against the old state
-          (d, Some(() => cur.write.mode("overwrite")
-            .parquet(s"${diffStateDir(cfg)}/v=$v")))
-        } else (toEnvelope(batch, cfg.tableName, tsCol), None)
+    capture(spark, batch, batchChecksum(batch), cfg, batchId, epoch, captureTs)
+  }
+
+  /** Detect + capture + record for a batch whose checksum is `current`. */
+  private def capture(spark: SparkSession, batch: DataFrame, current: String,
+      cfg: Config, batchId: Option[Long], epoch: Option[Long],
+      captureTs: Option[java.sql.Timestamp]): Boolean = {
+    val ledger = ledgerView(spark, cfg.metadataDir, cfg.tableName)
+    if (ledger.head.exists(_._1 == current)) return false
+    val tsCol = captureTs.map(t => lit(t)).getOrElse(current_timestamp())
+    // Capture-then-record, the reference's ordering (B5). With a batchId
+    // (streaming path) the capture lands in a per-batch dir written with
+    // overwrite — re-running a batch after a crash replaces rather than
+    // duplicates its output, upgrading the reference's at-least-once
+    // floor to idempotent capture. (The reference instead TRUNCATES on
+    // same-second filenames — bug B2.)
+    def writeEnvelopes(envelopes: DataFrame): Unit = {
       // Consistent-tick mode stamps every envelope with the shared tick
       // epoch — the join key that lets a consumer line up captures of
       // DIFFERENT tables taken against the same listing snapshot.
-      val stamped = epoch.fold(envelopeDf)(e =>
-        envelopeDf.withColumn("snapshot_epoch", lit(e)))
-      val writer = stamped.write
+      val writer = epoch.fold(envelopes)(e =>
+        envelopes.withColumn("snapshot_epoch", lit(e))).write
       batchId match {
         case Some(id) => writer.mode("overwrite").json(s"${cfg.outputDir}/batch=$id")
         case None     => writer.mode("append").json(cfg.outputDir)
       }
-      stateCommit.foreach(_.apply())
-      recordChecksum(spark, cfg.metadataDir, cfg.tableName, current)
     }
-    changed
+    if (cfg.mode == "diff") {
+      require(cfg.keyCols.nonEmpty, "diff mode requires keyCols")
+      val dir = diffStateDir(cfg)
+      // state version = batchId; a crashed run that wrote v=id but not
+      // its checksum re-diffs against the version BELOW id, so the
+      // re-run reproduces (not empties) the envelope set
+      val prevVersion = latestVersion(spark, dir, below = batchId.getOrElse(Long.MaxValue))
+      val v = batchId.getOrElse(prevVersion.fold(0L)(_ + 1))
+      // the envelope diff and the state write both read `cur`: computed
+      // once (scan, digests, JSON, shuffle), not once per write
+      val cur = keyedState(batch, cfg.keyCols).persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val prev = prevVersion match {
+          case Some(pv) => readState(spark, dir, pv)
+          case None => spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cur.schema)
+        }
+        // envelopes BEFORE the state advance: a crash between the two
+        // re-runs the diff against the old state
+        writeEnvelopes(diffEnvelopes(prev, cur, cfg.keyCols, cfg.tableName, tsCol))
+        cur.write.mode("overwrite").parquet(s"$dir/v=$v")
+        stateSchemas.put(dir, (v, cur.schema))
+      } finally cur.unpersist()
+    } else writeEnvelopes(toEnvelope(batch, cfg.tableName, tsCol))
+    recordChecksum(spark, cfg.metadataDir, cfg.tableName, current, ledger)
+    true
   }
 
   /** Multi-table fan-out (R22, duckdb_cdc.go:116-120): the reference
@@ -606,7 +725,7 @@ object CdcPipeline {
           tables.filter(_.mode == "diff").foreach { cfg =>
             val sd = diffStateDir(cfg)
             graft.core.Maintenance.pruneVersions(spark, sd, keepStateVersions)
-            stateVersions(spark, cfg).maxOption.foreach { v =>
+            latestVersion(spark, sd).foreach { v =>
               graft.core.Maintenance.compact(spark, s"$sd/v=$v")
             }
           }
@@ -628,25 +747,41 @@ object CdcPipeline {
     * schema. Column-set comparison (not full schema equality) keeps the
     * stable stream view when only inference noise differs — the canonical
     * digest is schema-order-driven, so swapping views without a real
-    * drift would flap the checksum. */
-  private def reprobed(batch: DataFrame, cfg: Config): DataFrame = {
-    // batch.inputFiles is empty on a micro-batch frame — resolve the
-    // batch's source files through input_file_name() instead (one tiny
-    // job over the already-read batch; maxFilesPerTrigger=1 → one file)
-    val files = batch.select(input_file_name()).distinct()
-      .collect().map(_.getString(0)).filter(_.nonEmpty)
-    if (files.isEmpty) return batch
-    val reader = batch.sparkSession.read
+    * drift would flap the checksum. Returns the batch to capture, its
+    * checksum and its row count.
+    *
+    * batch.inputFiles is empty on a micro-batch frame, so the batch's
+    * files come from input_file_name(), collected by the checksum job
+    * itself. Parquet files' column names are read from their footers on
+    * the driver (no Spark job); only when one differs does the probe pay
+    * for an inferred re-read and a re-checksum of it. JSON and CSV have
+    * no footer and always re-infer. */
+  private def reprobed(batch: DataFrame, cfg: Config): (DataFrame, String, Long) = {
+    val (checksum, rows, files) = checksumWithFiles(batch)
+    val names = batch.schema.fieldNames.toSet
+    val spark = batch.sparkSession
+    if (!cfg.reprobeSchema || files.isEmpty ||
+      (cfg.inputFormat == "parquet" && files.forall(footerColumns(spark, _) == names)))
+      return (batch, checksum, rows)
+    val reader = spark.read
     if (cfg.inputFormat == "csv")
       reader.option("header", "true").option("inferSchema", "true")
-    val actual = reader.format(cfg.inputFormat).load(files.toIndexedSeq: _*)
-    if (actual.schema.fieldNames.toSet == batch.schema.fieldNames.toSet) batch
-    else actual
+    val actual = reader.format(cfg.inputFormat).load(files: _*)
+    if (actual.schema.fieldNames.toSet == names) (batch, checksum, rows)
+    else (actual, batchChecksum(actual), rows)
+  }
+
+  /** Top-level column names in a parquet file's footer. */
+  private def footerColumns(spark: SparkSession, file: String): Set[String] = {
+    val in = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(new java.net.URI(file)), spark.sparkContext.hadoopConfiguration))
+    try in.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
+    finally in.close()
   }
 
   /** Start the monitoring stream: snapshot drops under inputDir/ are
-    * discovered per trigger (the reference's ticker, R21) and run through
-    * processBatch. */
+    * discovered per trigger (the reference's ticker, R21), reprobed, and
+    * run through processBatch's detect + capture + record path. */
   def start(spark: SparkSession, cfg: Config, schema: StructType): StreamingQuery = {
     val reader = spark.readStream.schema(schema)
     cfg.maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
@@ -656,15 +791,16 @@ object CdcPipeline {
       .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       .option("checkpointLocation", cfg.checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) => tickGuard {
-        val b = if (cfg.reprobeSchema) reprobed(batch, cfg) else batch
+        val (b, current, rows) = reprobed(batch, cfg)
         // Diff mode processes empty batches: a file-source batch exists
         // only for discovered files, so an empty one IS a truncated
         // snapshot, and skipping it would permanently swallow the DELETE
         // envelopes (state would still hold every row). Snapshot mode
         // keeps the conservative skip — a missed empty capture there
         // costs one redundant re-capture later, not correctness.
-        processBatch(b.sparkSession, b, cfg,
-          captureEmpty = cfg.mode == "diff", batchId = Some(id))
+        if (cfg.mode == "diff" || rows > 0)
+          capture(b.sparkSession, b, current, cfg, batchId = Some(id),
+            epoch = None, captureTs = None)
         ()
       } }
       .start()

@@ -333,6 +333,55 @@ class CdcPipelineSpec extends SparkSuite {
     assert(lines.count(_.contains("\"operation\":\"INSERT\"")) == 3)
   }
 
+  test("diff-mode stream: an unchanged drop runs at most 2 Spark jobs, a changed drop at most 9") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = tmpDir("cdc")
+    val c = cfg(base).copy(mode = "diff", keyCols = Seq("id"))
+    Files.createDirectories(Paths.get(c.inputDir))
+    // jobs of THIS query only, by micro-batch: stream jobs carry the
+    // query id and batch id as local properties; other suites' jobs and
+    // this thread's own writes carry neither. A marker job run from this
+    // thread afterwards flushes the asynchronous listener bus.
+    seedUsers.coalesce(1).write.mode("append").parquet(c.inputDir)
+    val query = CdcPipeline.start(spark, c, seedUsers.schema)
+    query.processAllAvailable()                             // batch 0: bootstrap
+    val marker = s"cdc-job-count-${query.id}"
+    val batchJobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    @volatile var flushed = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("graft.spec.marker").contains(marker)) flushed = true
+        if (prop("sql.streaming.queryId").contains(query.id.toString))
+          prop("streaming.sql.batchId").foreach(b => batchJobs.merge(b.toLong, 1, _ + _))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val changedDrop = seedUsers.filter($"id" =!= 2).unionAll(
+      Seq((3, "Bob Wilson", "bob@example.com", t0)).toDF("id", "name", "email", "created_at"))
+    try {
+      changedDrop.coalesce(1).write.mode("append").parquet(c.inputDir)
+      query.processAllAvailable()                           // batch 1: changed
+      changedDrop.coalesce(1).write.mode("append").parquet(c.inputDir)
+      query.processAllAvailable()                           // batch 2: unchanged
+      spark.sparkContext.setLocalProperty("graft.spec.marker", marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.spec.marker", null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!flushed && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(flushed, "listener bus did not deliver the marker job")
+    } finally {
+      query.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    // the drops did what their names say: DELETE + INSERT, then nothing
+    assert(jsonlLines(c.outputDir).size == 4)
+    val changed = batchJobs.getOrDefault(1L, 0)
+    val unchanged = batchJobs.getOrDefault(2L, 0)
+    assert(unchanged >= 1 && unchanged <= 2, s"unchanged tick ran $unchanged jobs")
+    assert(changed >= 1 && changed <= 9, s"changed tick ran $changed jobs")
+  }
+
   test("state maintenance under a live diff stream: prune+compact between triggers never breaks the next diff") {
     val base = tmpDir("cdc")
     val c = cfg(base).copy(mode = "diff", keyCols = Seq("id"))
@@ -699,6 +748,34 @@ class CdcPipelineSpec extends SparkSuite {
     assert(!CdcPipeline.processBatch(spark, seedUsers, c))
   }
 
+  test("ledger: rows appended out of band are honoured; every tick agrees with lastChecksum") {
+    val base = tmpDir("cdc")
+    val c = cfg(base)
+    val current = CdcPipeline.batchChecksum(seedUsers)
+    // a tick captures exactly when the on-disk ledger head differs
+    def tick(): Boolean = {
+      val expected = !CdcPipeline.lastChecksum(spark, c.metadataDir, "users").contains(current)
+      val changed = CdcPipeline.processBatch(spark, seedUsers, c)
+      assert(changed == expected, "the pipeline's ledger head must equal the disk read")
+      changed
+    }
+    def appendRow(checksum: String, ts: Timestamp): Unit =
+      Seq((checksum, ts)).toDF("checksum", "ts")
+        .write.mode("append").parquet(s"${c.metadataDir}/table_name=users")
+    assert(tick())
+    assert(!tick())
+    // another writer records a different head between two identical ticks
+    appendRow("0" * 32, new Timestamp(System.currentTimeMillis()))
+    assert(tick(), "an out-of-band head that differs from the batch must trigger a capture")
+    assert(!tick())
+    // a row stamped ahead of this process's clock stays the head even
+    // after the pipeline appends its own, so the next tick captures again
+    appendRow("f" * 32, new Timestamp(System.currentTimeMillis() + 3600000L))
+    assert(tick())
+    assert(tick())
+    assert(jsonlLines(c.outputDir).size == 8)
+  }
+
   test("torn diff-state write: a v= dir holding only _temporary is skipped and the next diff heals") {
     val base = tmpDir("cdc")
     val c = cfg(base).copy(mode = "diff", keyCols = Seq("id"))
@@ -823,55 +900,47 @@ class CdcPipelineSpec extends SparkSuite {
     val stateDir = s"${users.metadataDir}/state/table_name=${users.tableName}"
     val q = CdcPipeline.startConsistent(spark, Seq(users), ckpt,
       triggerMs = 100L, maintainEveryEpochs = 1L, keepStateVersions = 1)
-    def waitFor(n: Int): Unit = {
+    def liveVersions: Seq[String] =
+      // exact v=<n> only: a stop mid-compact can strand v=N__compact_*
+      // debris, which is rewrite scaffolding, not a retained version
+      if (!Files.exists(Paths.get(stateDir))) Nil
+      else Files.list(Paths.get(stateDir)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.matches("v=\\d+")).toSeq
+    // An envelope line lands MID-epoch: the state write, the prune and
+    // the pin prune of that epoch all follow it in the same foreachBatch,
+    // so stopping (or dropping the next snapshot) on sight of the line
+    // can strand a second version. Wait on stream state instead: the
+    // epoch that captured `op` is settled once the stream has committed a
+    // LATER batch — its whole foreachBatch, maintenance included, ran —
+    // and the prune has left exactly one live version. The later batch's
+    // own maintenance then has pruned pins below the captured epoch too.
+    def settle(op: String): Unit = {
       val deadline = System.currentTimeMillis() + 90000
-      while (jsonlLines(users.outputDir).size < n &&
-        System.currentTimeMillis() < deadline) Thread.sleep(100)
+      def captured: Option[Long] = jsonlLines(users.outputDir)
+        .find(_.contains(s"\"operation\":\"$op\""))
+        .flatMap(l => "\"snapshot_epoch\":(\\d+)".r.findFirstMatchIn(l))
+        .map(_.group(1).toLong)
+      def settled: Boolean = captured.exists(e =>
+        Option(q.lastProgress).exists(_.batchId > e)) && liveVersions.size == 1
+      while (!settled && System.currentTimeMillis() < deadline) Thread.sleep(100)
     }
     try {
-      waitFor(2) // bootstrap: 2 INSERTs
+      settle("INSERT") // bootstrap: 2 INSERTs
       Thread.sleep(20)
       seedUsers.withColumn("email",
         org.apache.spark.sql.functions.when($"id" === 2,
           org.apache.spark.sql.functions.lit("jane2@example.com"))
           .otherwise($"email"))
         .coalesce(1).write.mode("append").parquet(users.inputDir)
-      waitFor(3) // + 1 UPDATE — a second state version accreted, then
-      // the hook prunes it back to 1 and compacts the survivor
-      Thread.sleep(500) // let at least one maintenance epoch run post-capture
+      settle("UPDATE") // + 1 UPDATE — a second state version accreted,
+      // then the hook pruned it back to 1 and compacted the survivor
       Thread.sleep(20)
       seedUsers.filter($"id" =!= 1).withColumn("email",
         org.apache.spark.sql.functions.when($"id" === 2,
           org.apache.spark.sql.functions.lit("jane2@example.com"))
           .otherwise($"email"))
         .coalesce(1).write.mode("append").parquet(users.inputDir)
-      waitFor(4) // the diff against the pruned+compacted state: DELETE id=1
-      // the envelope line lands MID-batch (capture precedes maintenance in
-      // the same foreachBatch), so stopping on sight of line 4 can cancel
-      // exactly the prune this test exists to observe — wait until the
-      // delete epoch's own maintenance has pruned back to the floor
-      val pruneDeadline = System.currentTimeMillis() + 90000
-      def liveVersions: Seq[String] = {
-        import scala.jdk.CollectionConverters._
-        // exact v=<n> only: a stop mid-compact can strand v=N__compact_*
-        // debris, which is rewrite scaffolding, not a retained version
-        Files.list(Paths.get(stateDir)).iterator().asScala
-          .map(_.getFileName.toString).filter(_.matches("v=\\d+")).toSeq
-      }
-      // ... and until the PIN floor has caught up to the delete epoch:
-      // pin pruning runs in the same maintenance pass, but a stop landing
-      // between the version prune and a later epoch's pin prune would
-      // strand pins below the floor the final assert checks
-      def pinsCaughtUp: Boolean = {
-        import scala.jdk.CollectionConverters._
-        val pins = Files.list(Paths.get(s"$ckpt-listing")).iterator().asScala
-          .map(_.getFileName.toString).filter(_.startsWith("epoch-"))
-          .map(_.stripPrefix("epoch-").toLong).toSeq.sorted
-        val eps = epochsIn(users.outputDir)
-        pins.nonEmpty && eps.nonEmpty && pins.head >= eps.max - 2
-      }
-      while ((liveVersions.size > 1 || !pinsCaughtUp) &&
-        System.currentTimeMillis() < pruneDeadline) Thread.sleep(100)
+      settle("DELETE") // the diff against the pruned+compacted state
     } finally q.stop()
     // stop() can interrupt an in-flight compact mid-swap (maintenance
     // runs EVERY epoch here) — the documented crash window, where the
@@ -886,9 +955,7 @@ class CdcPipelineSpec extends SparkSuite {
     assert(lines.count(_.contains("\"operation\":\"DELETE\"")) == 1,
       "the diff against maintained state must still see the exact delta")
     // state pruned to the retention floor (1 version survives)
-    import scala.jdk.CollectionConverters._
-    val versions = Files.list(Paths.get(stateDir)).iterator().asScala
-      .map(_.getFileName.toString).filter(_.matches("v=\\d+")).toSeq
+    val versions = liveVersions
     assert(versions.size == 1,
       s"keepStateVersions=1 must leave exactly one version, got $versions")
     // pins pruned to the committed floor: every epoch's maintenance drops
@@ -970,6 +1037,22 @@ class CdcPipelineSpec extends SparkSuite {
       new org.apache.spark.SparkException(
         "[SPARK_JOB_CANCELLED] Job 7 cancelled Query [id = x, runId = y] was stopped SQLSTATE: XXKDA"))
     intercept[InterruptedException] { CdcPipeline.tickGuard(throw stopEx) }
+    // stop() reaching a task mid-write before the job is cancelled: the
+    // interrupt surfaces as the cause of a TASK_WRITE_FAILED job abort
+    def writeFailure(cause: Throwable) = new org.apache.spark.SparkException(
+      "Job aborted due to stage failure: [TASK_WRITE_FAILED] Task failed while writing rows to file:/s/v=2.",
+      new org.apache.spark.SparkException(
+        "[TASK_WRITE_FAILED] Task failed while writing rows to file:/s/v=2.", cause))
+    Seq(new java.nio.channels.ClosedByInterruptException,
+      new java.io.InterruptedIOException("interrupted"),
+      new org.apache.spark.TaskKilledException("stage cancelled")).foreach { cause =>
+      intercept[InterruptedException] { CdcPipeline.tickGuard(throw writeFailure(cause)) }
+    }
+    // a write failure for any other reason is a real tick failure
+    val diskFull = writeFailure(new java.io.IOException("No space left on device"))
+    assert(intercept[org.apache.spark.SparkException] {
+      CdcPipeline.tickGuard(throw diskFull)
+    } eq diskFull)
     // a real tick failure must NOT be converted into a clean stop
     val realEx = new org.apache.spark.SparkException("FileNotFoundException: gone")
     assert(intercept[org.apache.spark.SparkException] {
